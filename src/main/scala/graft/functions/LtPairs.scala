@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * a `size(..) > 0` filter under the explode that always follows (the
   * same pathology ShingleHash32s removes from the shingle pipeline).
   * This expression emits the identical multiset in one tight loop.
-  * Parity (order, duplicates, null passthrough) is pinned in
-  * ShingleHashSpec.
+  * Parity (order, duplicates, null passthrough, null slots) is pinned in
+  * LtPairsSpec.
   */
 case class LtPairs(child: Expression) extends UnaryExpression {
 
@@ -53,18 +53,24 @@ case class LtPairs(child: Expression) extends UnaryExpression {
 object LtPairs {
   /** All (xs(i), xs(j)) index pairs with xs(i) < xs(j), in the composed
     * spelling's order: outer loop over the left element's position, inner
-    * over the right's. Shared by interpreted eval and generated code. */
+    * over the right's. A null slot pairs with nothing, as `p.a < p.b` is
+    * null there and the composed `filter` drops it. Shared by interpreted
+    * eval and generated code. */
   def pairs(xs: ArrayData): ArrayData = {
     val n = xs.numElements()
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var i = 0
     while (i < n) {
-      val x = xs.getLong(i)
-      var j = 0
-      while (j < n) {
-        val y = xs.getLong(j)
-        if (x < y) out += InternalRow(x, y)
-        j += 1
+      if (!xs.isNullAt(i)) {
+        val x = xs.getLong(i)
+        var j = 0
+        while (j < n) {
+          if (!xs.isNullAt(j)) {
+            val y = xs.getLong(j)
+            if (x < y) out += InternalRow(x, y)
+          }
+          j += 1
+        }
       }
       i += 1
     }

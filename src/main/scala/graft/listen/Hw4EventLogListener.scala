@@ -22,7 +22,7 @@ import graft.jobs.WordCountJob
   * }}}
   *
   * Task mapping (SURVEY.md §7 "listener timing parity"): Spark tasks are not
-  * hw4 tasks one-to-one — a SQL job runs ≥2 stages and AQE may add more. The
+  * hw4 tasks one-to-one — a SQL query runs ≥2 stages and AQE may add more. The
   * mapping documented here: tasks of stages that produce shuffle output
   * (i.e. every stage except the job's final one) are "map tasks"; tasks of
   * the final (result) stage are "reduce tasks". Reduce task ids are 1-based
@@ -52,16 +52,18 @@ class Hw4EventLogListener(cfg: WordCountJob.Config, ncpus: Int)
   }
 
   override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-    // One run = one Start_Job line (hw4.cc:84), even though a SQL write
-    // spawns several Spark jobs (range-partition sampling, AQE stages).
+    // One run = one Start_Job line (hw4.cc:84). The WordCount job is one
+    // Spark job, one map stage and one result stage, as in hw4; a SQL query
+    // logged through this listener may spawn several jobs (AQE stages,
+    // eager actions) and still gets one Start_Job.
     synchronized {
       // Topology fallback for the stage classifier: within a job, every
       // stage that a later stage follows is a "map" phase; only the job's
       // last stage is a result ("reduce") phase. Used when the private
       // shuffleDepId API is unavailable (see onStageSubmitted). Exact for
-      // multi-stage job DAGs, i.e. with AQE off; under AQE each shuffle
-      // stage is its own single-stage job, where only the shuffleDepId
-      // probe can tell map from result.
+      // multi-stage job DAGs: the WordCount job, and SQL with AQE off;
+      // under AQE each SQL shuffle stage is its own single-stage job, where
+      // only the shuffleDepId probe can tell map from result.
       val ids = jobStart.stageInfos.map(_.stageId)
       if (ids.nonEmpty) {
         val maxId = ids.max

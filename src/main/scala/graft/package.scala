@@ -18,18 +18,28 @@ package object graft {
     * operator lineage cut through `Dataset.checkpoint()` instead —
     * replicated, executor-loss-safe, at the cost of a distributed write
     * per cut. Default (unset/false) keeps the exact local behavior every
-    * bench number was measured under.
+    * bench number was measured under. The flag without a checkpoint
+    * directory fails fast with an `IllegalStateException` at the first cut.
     */
   implicit final class GraftCkpt(private val df: DataFrame) extends AnyVal {
     def graftCkpt(): DataFrame =
       if (reliableCkpt(df)) df.checkpoint() else df.localCheckpoint()
 
+    /** The `storage` level applies to the local path only; a reliable
+      * checkpoint writes to the checkpoint directory and ignores it. */
     def graftCkpt(storage: org.apache.spark.storage.StorageLevel): DataFrame =
       if (reliableCkpt(df)) df.checkpoint()
       else df.localCheckpoint(true, storage)
 
-    private def reliableCkpt(d: DataFrame): Boolean =
-      d.sparkSession.conf
+    private def reliableCkpt(d: DataFrame): Boolean = {
+      val on = d.sparkSession.conf
         .getOption("spark.graft.reliableCheckpoint").exists(_.toBoolean)
+      if (on && d.sparkSession.sparkContext.getCheckpointDir.isEmpty)
+        throw new IllegalStateException(
+          "spark.graft.reliableCheckpoint=true needs a checkpoint directory: " +
+            "set spark.checkpoint.dir (or call SparkContext.setCheckpointDir), " +
+            "or unset spark.graft.reliableCheckpoint")
+      on
+    }
   }
 }

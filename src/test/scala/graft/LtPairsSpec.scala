@@ -24,11 +24,7 @@ class LtPairsSpec extends AnyFunSuite {
     (1L to 20L).map(Long.box),
     null)
 
-  test("lt_pairs == filter(flatten(transform(...))) on the zoo") {
-    import spark.implicits._
-    val df = arrays.zipWithIndex
-      .map { case (a, i) => (i.toLong, if (a == null) null else a.map(Long.unbox)) }
-      .toDF("id", "xs")
+  private def assertParity(df: org.apache.spark.sql.DataFrame): Unit = {
     val rows = df.select(col("id"),
         LtPairs.ltPairs(col("xs")).as("fused"),
         expr("filter(flatten(transform(xs, x -> transform(xs, y -> " +
@@ -40,5 +36,24 @@ class LtPairsSpec extends AnyFunSuite {
         assert(r.getSeq[org.apache.spark.sql.Row](1) ==
           r.getSeq[org.apache.spark.sql.Row](2), s"id ${r.getLong(0)}")
     }
+  }
+
+  test("lt_pairs == filter(flatten(transform(...))) on the zoo") {
+    import spark.implicits._
+    assertParity(arrays.zipWithIndex
+      .map { case (a, i) => (i.toLong, if (a == null) null else a.map(Long.unbox)) }
+      .toDF("id", "xs"))
+  }
+
+  test("null slots pair with nothing, as the composed spelling's filter drops them") {
+    import spark.implicits._
+    assertParity(Seq(
+      1L -> Seq(Some(1L), None, Some(3L)),
+      2L -> Seq(None, Some(2L), None, Some(1L), Some(5L)),
+      3L -> Seq(None, None)).toDF("id", "xs"))
+    // a literal array folds at planning time: the interpreted path
+    val folded = spark.range(1).select(LtPairs.ltPairs(expr("array(1L, null, 3L)")))
+      .head().getSeq[org.apache.spark.sql.Row](0)
+    assert(folded == Seq(org.apache.spark.sql.Row(1L, 3L)))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -28,14 +29,43 @@ class WordCountJobSpec extends AnyFunSuite {
     f
   }
 
-  private def runJob(text: String, r: Int, fidelity: Boolean = false,
-      fidelityTok: Boolean = false, chunkSize: Int = 2): Seq[Path] = {
-    val in = writeInput(text)
-    val out = Files.createTempDirectory("wc-out")
-    WordCountJob.run(spark, WordCountJob.Config(
+  private def config(in: Path, r: Int, fidelity: Boolean = false,
+      fidelityTok: Boolean = false, chunkSize: Int = 2): WordCountJob.Config =
+    WordCountJob.Config(
       jobName = "t", numReducer = r, delay = 0, inputPath = in.toString,
-      chunkSize = chunkSize, localityConfigPath = "unused", outputDir = out.toString,
-      fidelityPartitioner = fidelity, fidelityTokenizer = fidelityTok))
+      chunkSize = chunkSize, localityConfigPath = "unused",
+      outputDir = Files.createTempDirectory("wc-out").toString,
+      fidelityPartitioner = fidelity, fidelityTokenizer = fidelityTok)
+
+  private def runJob(text: String, r: Int, fidelity: Boolean = false,
+      fidelityTok: Boolean = false, chunkSize: Int = 2): Seq[Path] =
+    WordCountJob.run(spark, config(writeInput(text), r, fidelity, fidelityTok, chunkSize))
+
+  private def wordsOf(f: Path): Seq[String] =
+    Files.readAllLines(f).asScala.toSeq.map(l => l.substring(0, l.lastIndexOf(' ')))
+
+  /** UTF-8 byte order: Spark SQL's string order, and the order of the
+    * output contract. */
+  private def utf8Lt(a: String, b: String): Boolean =
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0
+
+  /** The three properties of a correct run on `in`: the merged output
+    * equals [[WordCountJob.counts]] on the same input, each file is sorted
+    * by UTF-8 bytes, and the files are range-contiguous in file order. */
+  private def assertCorrect(in: Path, files: Seq[Path], clue: String): Unit = {
+    val expected = WordCountJob.counts(spark, in.toString).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = parse(files)
+    assert(got.toMap == expected, clue)
+    assert(got.size == expected.size, s"$clue: a word in two lines")
+    files.foreach { f =>
+      val ws = wordsOf(f)
+      assert(ws.zip(ws.drop(1)).forall { case (a, b) => utf8Lt(a, b) },
+        s"$clue: ${f.getFileName} is not sorted by UTF-8 bytes: $ws")
+    }
+    val all = files.flatMap(wordsOf)
+    assert(all.zip(all.drop(1)).forall { case (a, b) => utf8Lt(a, b) },
+      s"$clue: files are not range-contiguous: ${files.map(wordsOf)}")
   }
 
   private def parse(files: Seq[Path]): Seq[(String, Long)] =
@@ -136,5 +166,81 @@ class WordCountJobSpec extends AnyFunSuite {
     val files = runJob("aa bb\ncc dd\nee", 3, fidelity = true, fidelityTok = true)
     val perFile = files.map(f => Files.readAllLines(f).asScala.toSeq)
     assert(perFile == Seq(Seq(), Seq("aa 1"), Seq("bbcc 1")))
+  }
+  test("ordering: words sort by UTF-8 bytes across whitespace kinds and non-BMP text") {
+    // U+1F600 (a surrogate pair in UTF-16) sorts below U+FF5E by
+    // String.compareTo but above it by UTF-8 bytes, Spark SQL's order
+    val cases = Seq(
+      "non-BMP vs U+E000-U+FFFF" -> "a\uD83D\uDE00 a\uFF5E \uFF5E \uD83D\uDE00 a\uD83D\uDE00b a\uFF5Eb z a",
+      "tab, CRLF, form feed, vertical tab" -> "a\tb\r\nc\fd\u000Be\r\nf\t\tg\u000B\u000Bh",
+      "leading, trailing and double whitespace" -> "  lead  double   trail  \n\t x  \n  \n",
+      "last line without a newline" -> "one two\nthree four\nfive",
+      "non-ASCII spaces are word characters" -> "p\u3000q p\u00A0q p q \u00A0")
+    for ((clue, text) <- cases; r <- Seq(1, 3)) {
+      val in = writeInput(text)
+      assertCorrect(in, WordCountJob.run(spark, config(in, r)), s"$clue, R=$r")
+    }
+  }
+
+  test("sampler: empty input gives R empty files") {
+    val files = runJob("", 4)
+    assert(files.map(_.getFileName.toString) == (1 to 4).map(i => s"t-$i.out"))
+    assert(files.forall(f => Files.size(f) == 0L))
+  }
+
+  test("sampler: input shorter than one window, R = 1 and R > distinct words") {
+    for (r <- Seq(1, 3, 7)) {
+      val in = writeInput("b a c b\nd")
+      val files = WordCountJob.run(spark, config(in, r))
+      assert(files.size == r)
+      assertCorrect(in, files, s"R=$r")
+    }
+  }
+
+  test("sampler: one line longer than a window, no newline") {
+    // 20 KB: read whole, longer than a 16 KB window; 1.1 MB: past the
+    // whole-read limit, so every window lies inside the one line
+    for (n <- Seq(3000, 160000)) {
+      val in = writeInput((0 until n).map(i => f"w${i % 5000}%05d").mkString(" "))
+      assertCorrect(in, WordCountJob.run(spark, config(in, 4)), s"$n words")
+    }
+  }
+
+  test("sampler: a directory of three files, hidden files skipped as textFile does") {
+    val dir = Files.createTempDirectory("wc-dir")
+    val rnd = new scala.util.Random(5)
+    Seq("a.txt" -> 40000, "b.txt" -> 70000, "c.txt" -> 30000).foreach { case (name, n) =>
+      Files.writeString(dir.resolve(name),
+        Seq.fill(n)(f"d${rnd.nextInt(20000)}%05d").grouped(12).map(_.mkString(" ")).mkString("\n"))
+    }
+    Files.writeString(dir.resolve(".hidden"), "ghost")
+    Files.writeString(dir.resolve("_meta"), "ghost")
+    val files = WordCountJob.run(spark, config(dir, 5))
+    assertCorrect(dir, files, "directory")
+    assert(!parse(files).toMap.contains("ghost"))
+  }
+
+  test("sampler: input sorted by word stays balanced (max/median lines <= 2 at R = 8)") {
+    // 2.7 MB of sorted lines: only windows spread over the whole input see
+    // its upper words; a 1 MB prefix would put most words in the last file
+    val in = Files.createTempFile("wc-sorted", ".txt")
+    Files.write(in, (0 until 300000).map(i => f"w$i%07d").asJava)
+    val files = WordCountJob.run(spark, config(in, 8))
+    val lines = files.map(f => Files.readAllLines(f).size).sorted
+    assert(lines.sum == 300000)
+    assert(lines.last <= 2 * lines(lines.size / 2), s"lines per file: $lines")
+    val all = files.flatMap(wordsOf)
+    assert(all == all.sorted)
+  }
+
+  test("bounded combiner: a flush cap of 4 gives the same files as the default cap") {
+    val text = (0 until 2000).map(i => s"w${(i * 7) % 50}").grouped(10)
+      .map(_.mkString(" ")).mkString("\n")
+    val in = writeInput(text)
+    val capped = WordCountJob.run(spark, config(in, 3), combineCap = 4)
+    val uncapped = WordCountJob.run(spark, config(in, 3))
+    assert(capped.map(f => Files.readAllLines(f).asScala.toSeq) ==
+      uncapped.map(f => Files.readAllLines(f).asScala.toSeq))
+    assertCorrect(in, capped, "cap 4")
   }
 }
